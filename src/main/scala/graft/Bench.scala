@@ -1,30 +1,22 @@
 package graft
 
-/** Benchmark main. Two execution shapes share one measurement core:
+import org.apache.spark.sql.SparkSession
+
+/** Benchmark main: ONE measured Spark session over the selected queries
+  * (`GRAFT_BENCH_ONLY`, default the whole registry), the shape the
+  * reference's usage DAG runs each task in.
   *
-  *  - SINGLE-SESSION (focused probes, `GRAFT_BENCH_SINGLE_JVM=1`, or any
-  *    selection that fits one block): exactly the shape every committed
-  *    floor sidecar was measured in — unchanged, so floors stay
-  *    comparable round over round.
-  *  - PER-BLOCK JVM ISOLATION (default for full-surface runs, round 18):
-  *    the coordinator splits [[SessionMemos.benchOrder]] into
-  *    family-atomic blocks of ≤ `GRAFT_BENCH_BLOCK_SIZE` queries and runs
-  *    each block in a FRESH child JVM, merging the block sidecars into
-  *    the usual contract lines. Rationale: the round-17 bisect pinned a
-  *    ~30–60 s in-run tax (driver BENCH_r17 224 s vs same-code 138.5 s
-  *    close) to intra-JVM memory-system aftermath of heavy predecessors —
-  *    a single-JVM local[32] artifact that separate executor processes
-  *    (any real deployment) don't have; every in-JVM knob (GC, IHOP,
-  *    heap, inter-query GC) was measured useless (BASELINE round 17). A
-  *    block's aftermath now dies with its process; the N× session
-  *    startup is reported off-clock (`jvm_overhead_s`).
+  * The session is built once — against the N×-replicated corpus when
+  * `GRAFT_BENCH_SCALE=N` is set — and warmed with one untimed `combine`.
+  * It then builds every one-time fixture the selection needs OFF the
+  * clock ([[fixtures]]), and times each query best-of-2 in
+  * [[SessionMemos.benchOrder]], releasing each memo family after its last
+  * consumer. Results go to two stdout contract lines plus the
+  * `bench_last.json` and `bench/bench_<tag>.json` sidecars.
   *
-  * A child session is selected by `GRAFT_BENCH_CHILD_OUT=<path>`: it
-  * runs its `GRAFT_BENCH_ONLY` block exactly like a focused probe but
-  * writes its full sidecar JSON to that path (no stdout contract lines,
-  * no bench_last.json/bench/ writes, no load-gate wait — the parent
-  * gated once; a child re-gating would false-trip on the load its own
-  * predecessor blocks induced).
+  * One shape on purpose: per-block child JVMs (round 18) matched its
+  * timed totals at ×100 but spent another 1165–2075 s outside the timed
+  * region.
   */
 object Bench {
 
@@ -78,15 +70,53 @@ object Bench {
   private def fmt(v: Double): String =
     if (v < 0) "-1" else "%.3f".formatLocal(java.util.Locale.ROOT, v)
 
-  // the one-time fixture-build fields, in contract order — the coordinator
-  // sums them across child blocks so each keeps meaning exactly what it
-  // meant in BENCH_r01-r17 (the named build alone, off-clock)
-  private val FixtureFields: Seq[String] = Seq(
-    "bucketed_fixture_s", "orc_fixture_s", "variant_fixture_s",
-    "ann_index_fixture_s", "dpp_fixture_s", "ann_rank_fixture_s",
-    "graph_edges_fixture_s", "sem_model_fixture_s", "dedup_pairs_fixture_s",
-    "dedup_base_fixture_s", "grams_fixture_s", "bigrams_fixture_s",
-    "corpus_fixture_s")
+
+  /** One one-time derived artifact: the sidecar field its build seconds
+    * land in, the queries whose selection triggers the build, and the
+    * build itself (a FixtureStore obtain — a store hit costs ~ms).
+    */
+  private[graft] final case class Fixture(field: String,
+      triggers: Set[String], build: (SparkSession, String) => Any)
+
+  // a memo family's fixture row: field and triggers come from the
+  // family registry, so a consumer added there is a trigger here
+  private def memoFixture(family: String,
+      build: (SparkSession, String) => Any): Fixture = {
+    val fam = SessionMemos.families.find(_.name == family).getOrElse(
+      throw new NoSuchElementException(s"no memo family '$family'"))
+    Fixture(s"${fam.name}_fixture_s", fam.consumers, build)
+  }
+
+  /** The one-time fixture builds, in contract field order. Layout writes
+    * (bucketed tables, ORC copy, variant zone, day-partitioned events),
+    * trained models (IVF-PQ index, semantic model) and corpus-derived
+    * frames (rankings, edges, near-dup pairs, base band index, gram and
+    * bigram frames) are computed once per corpus version in a deployment,
+    * so their seconds are reported beside the timings, never inside a
+    * timed window — each field means "the named build alone", as it has
+    * since BENCH_r01. `corpus_fixture_s` (the scaled-corpus obtain) is
+    * the last contract field and is timed before the session starts.
+    */
+  private[graft] val fixtures: Seq[Fixture] = {
+    import graft.operators.{Dedup, Graph, Similarity, TextAnalysis}
+    import graft.sources.Ingest
+    Seq(
+      Fixture("bucketed_fixture_s", Set("bucketed_join"), Ingest.bucketedTables),
+      Fixture("orc_fixture_s", Set("orc_roundtrip"), Ingest.orcPartCopy),
+      Fixture("variant_fixture_s", Set("variant_mixed"), Ingest.variantZone),
+      Fixture("ann_index_fixture_s", Set("ann_index_persist"),
+        Similarity.ivfPqIndexWrite),
+      Fixture("dpp_fixture_s", Set("dpp_join"), Ingest.dppEventsCopy),
+      memoFixture("ann_rank", Similarity.rankedTopKWrite),
+      memoFixture("graph_edges", Graph.edgeFixtureWrite),
+      Fixture("sem_model_fixture_s", Set("dedup_semantic", "sample_prune_proto"),
+        Similarity.semanticModelWrite),
+      memoFixture("dedup_pairs", Dedup.pairFixtureWrite),
+      Fixture("dedup_base_fixture_s", Set("dedup_incr_index"),
+        Dedup.baseIndexWrite),
+      memoFixture("grams", TextAnalysis.gramFixtureWrite),
+      memoFixture("bigrams", TextAnalysis.bigramFixtureWrite))
+  }
 
   // Load-gate: two rounds produced BENCH artifacts with 5-10× phantom
   // per-query regressions that were pure host contention (r14:
@@ -168,221 +198,11 @@ object Bench {
     SparkEntry.queries.keySet.filter(n => only.forall(_.contains(n)))
   }
 
+
   def main(args: Array[String]): Unit = {
     val selected = selectedNames()
-    val childOut = sys.env.get("GRAFT_BENCH_CHILD_OUT")
-    // Isolation granularity is a measured trade (r18 A/B, all committed):
-    // a fresh child JVM taxes every query ~0.05–0.3 s while C2 re-warms
-    // Spark's core paths — a CONSTANT that dwarfs sub-second sf0.1
-    // queries (blocks-of-16 read +41 s over the single-JVM shape at
-    // quiet steal, bench_r18_sf01_multijvm3 vs _single1; quiet-window
-    // median tax halves again at 64, _block64) but vanishes against
-    // 5–30 s ×100 queries, where the intra-JVM aftermath the isolation
-    // kills (~30–60 s/session, BASELINE r17 bisect) is the dominant
-    // artifact. Default: 64 per block unscaled (3 JVMs, aftermath
-    // bounded per ~60 queries), 16 when GRAFT_BENCH_SCALE is set.
-    val blockSize = Knobs.envInt("GRAFT_BENCH_BLOCK_SIZE",
-      if (scaleFactor().isDefined) 16 else 64, 1, 10000)
-    // Round 19 (verdict task 1): the full-surface UNSCALED default is
-    // single-JVM again. On the driver's host the block mode that shipped
-    // in r18 produced 625 s of untimed overhead on a 235 s timed total
-    // and roaming 2–40× per-query pockets the builder's host never showed
-    // (text_repetition 25.2 s driver vs 0.57 s same-code sidecar) — each
-    // fresh child commits an Xms-pinned 8 GB heap, and on a host with
-    // guest free-page reporting that page-faulting is exactly the
-    // documented slow path (build.sbt heap note), multiplied by N blocks
-    // and tripled CPU exposure from the per-query warm pass. At sf0.1 the
-    // artifact the isolation kills (~30–60 s/session intra-JVM aftermath)
-    // is smaller than the isolation's own driver-host cost, so unscaled
-    // runs take the stable shape and SCALED runs (5–30 s/query, where the
-    // aftermath dominates and the per-child constant vanishes) keep
-    // per-block isolation. GRAFT_BENCH_SINGLE_JVM=0|1 still forces either
-    // shape explicitly.
-    val singleJvm = sys.env.get("GRAFT_BENCH_SINGLE_JVM") match {
-      case Some(v) => v == "1"
-      case None => scaleFactor().isEmpty
-    }
-    // focused probes (≤ one block) keep the single-session shape their
-    // committed floor sidecars were measured in
-    if (childOut.isDefined || singleJvm || selected.size <= blockSize)
-      runSession(selected, childOut)
-    else coordinate(selected, blockSize)
-  }
-
-  /** Spawn one child JVM per family-atomic block and merge the block
-    * sidecars into the usual contract lines + sidecar files.
-    */
-  private def coordinate(selected: Set[String], blockSize: Int): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val (load1Start, load5Start, contended, waits) = loadGate()
-    val (runSteal0, runTotal0) = cpuJiffies()
-    // the parent pays any scaled-corpus GENERATION exactly once, before
-    // any child starts — children then obtain a store hit in ~ms
-    val scale = scaleFactor()
-    var corpusFixtureSecs = 0.0
-    scale.foreach { f =>
-      val t0 = System.nanoTime()
-      val root = ScaleUp.obtainScaled(sfDir, f)
-      corpusFixtureSecs = (System.nanoTime() - t0) / 1e9
-      System.err.println(
-        f"[bench] scaled corpus (×$f) at $root (obtain $corpusFixtureSecs%.1f s)")
-    }
-    // family-atomic chunking: a unit (one memo family's consumers, or a
-    // singleton) never splits across JVMs — the family memo must build
-    // and release within one session
-    val units = SessionMemos.benchUnits(selected)
-    val blocks = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
-    var cur = scala.collection.mutable.ArrayBuffer.empty[String]
-    units.foreach { u =>
-      if (cur.nonEmpty && cur.size + u.size > blockSize) {
-        blocks += cur.toSeq; cur = scala.collection.mutable.ArrayBuffer.empty
-      }
-      cur ++= u
-    }
-    if (cur.nonEmpty) blocks += cur.toSeq
-    System.err.println(
-      s"[bench] per-block JVM isolation: ${blocks.size} blocks of ${blocks.map(_.size).mkString("/")} queries")
-    // child JVMs inherit exactly the parent's flags (build.sbt javaOptions
-    // arrive verbatim via the RuntimeMXBean) and classpath — sbt's forked
-    // run passes the real -classpath, verified to contain the Spark jars
-    import scala.jdk.CollectionConverters._
-    val javaBin = java.nio.file.Paths.get(
-      System.getProperty("java.home"), "bin", "java").toString
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toSeq
-    val cp = System.getProperty("java.class.path")
-    require(cp != null && cp.contains("spark"),
-      "java.class.path lacks the Spark jars — run with GRAFT_BENCH_SINGLE_JVM=1")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val passes = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-    val storageAfter = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val stealPct = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val fixtures = scala.collection.mutable.LinkedHashMap(
-      FixtureFields.map(_ -> 0.0): _*)
-    fixtures("corpus_fixture_s") = corpusFixtureSecs
-    var childWallSum = 0.0
-    def runChild(only: Seq[String], outFile: java.nio.file.Path,
-        fixturesOnly: Boolean, label: String): Int = {
-      val cmd = (Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench")).asJava
-      val pb = new ProcessBuilder(cmd)
-      pb.environment().put("GRAFT_BENCH_ONLY", only.mkString(","))
-      pb.environment().put("GRAFT_BENCH_CHILD_OUT", outFile.toString)
-      if (fixturesOnly) pb.environment().put("GRAFT_BENCH_FIXTURES_ONLY", "1")
-      pb.environment().remove("GRAFT_BENCH_TAG")
-      // child stderr (Spark logs) flows through as today; child stdout is
-      // discarded — the contract lines are the COORDINATOR's to print
-      pb.redirectErrorStream(false)
-      pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-      pb.redirectOutput(ProcessBuilder.Redirect.DISCARD)
-      val t0 = System.nanoTime()
-      val rc = try pb.start().waitFor()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $label spawn failed: $e"); -1 }
-      childWallSum += (System.nanoTime() - t0) / 1e9
-      rc
-    }
-    // ALL one-time fixture builds run in their own child JVM BEFORE any
-    // measurement block: a fresh jar flips the content stamps, and a
-    // 50 s rank-fixture rebuild inside a measurement JVM poisons that
-    // block's timed windows with its memory-system aftermath (the same
-    // mechanism the per-block isolation exists to kill — observed as
-    // quiet-steal 6–10× inflation on the block's late queries in
-    // bench_r18_sf01_multijvm2). The build seconds land in the contract's
-    // fixture fields from THIS child alone; the measurement blocks then
-    // obtain store hits, whose ~0.1 s serve costs are deliberately NOT
-    // folded in (the fields mean "the named build alone" since r01).
-    var fixturesFromChild = false
-    locally {
-      val outFile = java.nio.file.Files.createTempFile("graft_bench_fx", ".json")
-      java.nio.file.Files.deleteIfExists(outFile)
-      val rc = runChild(selected.toSeq.sorted, outFile, fixturesOnly = true,
-        label = "fixture build")
-      if (rc == 0) {
-        try {
-          val root = mapper.readTree(java.nio.file.Files.readAllBytes(outFile))
-          FixtureFields.foreach { f =>
-            val v = root.get(f)
-            if (v != null && v.asDouble(0.0) > 0) fixtures(f) += v.asDouble(0.0)
-          }
-          fixturesFromChild = true
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] fixture-build sidecar unreadable: $e") }
-      } else System.err.println(
-        s"[bench] fixture-build child exited rc=$rc — blocks will build inline")
-      java.nio.file.Files.deleteIfExists(outFile)
-      System.err.println("[bench] fixture build done")
-    }
-    blocks.zipWithIndex.foreach { case (block, i) =>
-      val outFile = java.nio.file.Files.createTempFile("graft_bench_block", ".json")
-      java.nio.file.Files.deleteIfExists(outFile)
-      val rc = runChild(block, outFile, fixturesOnly = false,
-        label = s"block ${i + 1}")
-      val parsed =
-        if (rc != 0) { System.err.println(
-          s"[bench] block ${i + 1}/${blocks.size} exited rc=$rc — marking its ${block.size} queries failed"); None }
-        else try Some(mapper.readTree(java.nio.file.Files.readAllBytes(outFile)))
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] block ${i + 1} sidecar unreadable: $e"); None }
-      parsed match {
-        case Some(root) =>
-          val p = root.get("passes"); val st = root.get("storage_after_mb")
-          val sp = root.get("steal_pct")
-          block.foreach { name =>
-            val arr = if (p != null) p.get(name) else null
-            passes(name) =
-              if (arr == null) (-1.0, -1.0)
-              else (arr.get(0).asDouble(-1.0), arr.get(1).asDouble(-1.0))
-            storageAfter(name) =
-              if (st != null && st.get(name) != null) st.get(name).asDouble(-1.0) else -1.0
-            stealPct(name) =
-              if (sp != null && sp.get(name) != null) sp.get(name).asDouble(-1.0) else -1.0
-          }
-          if (!fixturesFromChild) FixtureFields.foreach { f =>
-            val v = root.get(f)
-            if (v != null && v.asDouble(0.0) > 0) fixtures(f) += v.asDouble(0.0)
-          }
-        case None =>
-          block.foreach { name =>
-            passes(name) = (-1.0, -1.0); storageAfter(name) = -1.0
-            stealPct(name) = -1.0
-          }
-      }
-      java.nio.file.Files.deleteIfExists(outFile)
-      System.err.println(s"[bench] block ${i + 1}/${blocks.size} done")
-    }
-    val results = passes.toSeq.map { case (name, (p1, p2)) =>
-      name -> (if (p1 < 0 || p2 < 0) -1.0 else math.min(p1, p2))
-    }
-    val totalP1 = passes.valuesIterator.map(_._1).filter(_ >= 0).sum
-    // everything the blocks spent beyond timed passes + fixture builds:
-    // N× session startup, warmups, obtain hits — off-clock by design,
-    // reported so the isolation's cost stays visible
-    val accounted = passes.valuesIterator
-      .map { case (p1, p2) => math.max(p1, 0) + math.max(p2, 0) }.sum +
-      fixtures.valuesIterator.sum - corpusFixtureSecs
-    val overhead = math.max(0.0, childWallSum - accounted)
-    val (load1End, load5End) = loadAvg()
-    val (runSteal1, runTotal1) = cpuJiffies()
-    val runStealPct =
-      if (runSteal0 < 0 || runSteal1 < 0 || runTotal1 <= runTotal0) -1.0
-      else 100.0 * (runSteal1 - runSteal0).toDouble / (runTotal1 - runTotal0)
-    emit(results, passes.toMap, storageAfter, stealPct, fixtures,
-      sfJson(sfDir, scale), totalP1,
-      load1Start, load5Start, load1End, load5End, runStealPct, contended,
-      waits, extraFields =
-        s""","jvm_blocks":${blocks.size},"jvm_overhead_s":${fmt(overhead)}""")
-  }
-
-  /** One measured session: the focused-probe / child-block / opt-out
-    * single-JVM shape (exactly the round-17 measurement core).
-    */
-  private def runSession(selected: Set[String], childOut: Option[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // a child does NOT re-gate: the parent gated once, and a child's gate
-    // would false-trip on the load its own predecessor blocks induced
-    val (load1Start, load5Start, contended, waits) =
-      if (childOut.isDefined) { val l = loadAvg(); (l._1, l._2, false, 0) }
-      else loadGate()
     val scale = scaleFactor()
     var corpusFixtureSecs = 0.0
     val effDir = scale match {
@@ -407,142 +227,23 @@ object Bench {
     def exec(name: String): Unit =
       SparkEntry.queries(name)(spark, effDir).queryExecution.toRdd
         .foreach(_ => ())
-    // GRAFT_BENCH_FIXTURES_ONLY=1 (the coordinator's fixture-build
-    // child): build every one-time fixture the selection needs, report
-    // their seconds in the sidecar, and run NO timed passes — the
-    // measurement blocks that follow obtain store hits, so no build's
-    // memory-system aftermath ever shares a JVM with a timed window.
-    val fixturesOnly = sys.env.get("GRAFT_BENCH_FIXTURES_ONLY").contains("1")
     // Warm the JVM once (codegen compiler, parquet reader, shuffle, join
     // machinery) so the first timed query doesn't absorb session startup.
     // Warm against the bench's OWN data dir — a hardcoded path could be
     // absent and silently skip the warmup, skewing the first timed query.
-    if (!fixturesOnly) {
-      try exec("combine")
-      catch { case e: Throwable => System.err.println(s"[bench] warmup failed: $e") }
-      Scratch.release(spark)
-    }
-    // bucketed_join exists to demonstrate the exchange-free join; its
-    // bucketed-table LAYOUT write is one-time amortized cost, not query
-    // cost — build the fixture here and report its seconds separately so
-    // the timed entry measures only the join.
-    // fixtures timed SEPARATELY — bucketed_fixture_s must keep meaning
-    // exactly what it meant in BENCH_r01-r07 (the bucketed write alone)
-    // for round-over-round comparisons
-    def timedFixture(name: String, wanted: Boolean)(build: => Unit): Double =
-      if (!wanted) 0.0
-      else {
+    try exec("combine")
+    catch { case e: Throwable => System.err.println(s"[bench] warmup failed: $e") }
+    Scratch.release(spark)
+    val fixtureSecs = fixtures.map { fx =>
+      fx.field -> (if (!fx.triggers.exists(selected.contains)) 0.0 else {
         val t0 = System.nanoTime()
-        try build
+        try fx.build(spark, effDir)
         catch { case e: Throwable =>
-          System.err.println(s"[bench] $name fixture failed: $e")
+          System.err.println(s"[bench] ${fx.field} build failed: $e")
         }
         (System.nanoTime() - t0) / 1e9
-      }
-    val fixtures = scala.collection.mutable.LinkedHashMap(
-      FixtureFields.map(_ -> 0.0): _*)
-    fixtures("corpus_fixture_s") = corpusFixtureSecs
-    fixtures("bucketed_fixture_s") =
-      timedFixture("bucketed", selected.contains("bucketed_join")) {
-        graft.sources.Ingest.bucketedTables(spark, effDir); ()
-      }
-    // same contract for the ORC interchange copy: layout writes are
-    // one-time amortized cost, the timed entries measure the reads
-    fixtures("orc_fixture_s") =
-      timedFixture("orc", selected.contains("orc_roundtrip")) {
-        graft.sources.Ingest.orcPartCopy(spark, effDir); ()
-      }
-    // the variant landing-zone write is the same one-time amortized cost
-    fixtures("variant_fixture_s") =
-      timedFixture("variant", selected.contains("variant_mixed")) {
-        graft.sources.Ingest.variantZone(spark, effDir); ()
-      }
-    // the trained-ANN-index write (train + encode + parquet tables) is the
-    // same one-time amortized cost — the timed entry measures the
-    // serve-from-disk query alone
-    fixtures("ann_index_fixture_s") =
-      timedFixture("ann_index", selected.contains("ann_index_persist")) {
-        graft.operators.Similarity.ivfPqIndexWrite(spark, effDir); ()
-      }
-    // the day-partitioned events layout is the same one-time amortized
-    // cost — the timed entry measures the dynamically-pruned join alone
-    fixtures("dpp_fixture_s") =
-      timedFixture("dpp", selected.contains("dpp_join")) {
-        graft.sources.Ingest.dppEventsCopy(spark, effDir); ()
-      }
-    // the six ranked top-k frames the retrieval-quality readouts consume:
-    // computed once per corpus version in a deployment, so the ranking
-    // build is one-time amortized cost — the timed entries measure the
-    // metric readout, not six pipeline rebuilds
-    fixtures("ann_rank_fixture_s") =
-      timedFixture("ann_rank", Seq("ann_recall", "ann_mrr", "retrieval_rrf",
-        "embed_pairs_mine").exists(selected.contains)) {
-        graft.operators.Similarity.rankedTopKWrite(spark, effDir); ()
-      }
-    // the trained measured-K semantic model, same one-time contract — the
-    // timed entries measure assignment + pair verdict, not Lloyd rounds
-    fixtures("sem_model_fixture_s") =
-      timedFixture("sem_model", Seq("dedup_semantic", "sample_prune_proto")
-        .exists(selected.contains)) {
-        graft.operators.Similarity.semanticModelWrite(spark, effDir); ()
-      }
-    // the graph family's two shared edge sets, same one-time contract
-    fixtures("graph_edges_fixture_s") =
-      timedFixture("graph_edges", Seq("graph_triangles_big", "graph_lpa",
-        "graph_jaccard", "graph_pagerank_big", "graph_bfs", "graph_closeness",
-        "graph_degree").exists(selected.contains)) {
-        graft.operators.Graph.edgeFixtureWrite(spark, effDir); ()
-      }
-    // the near-dup family's pair/label frames — one-time amortized cost
-    // like the gram frames; the timed consumers measure readouts over the
-    // served materialization, not the corpus derivation
-    fixtures("dedup_pairs_fixture_s") =
-      timedFixture("dedup_pairs", Seq("dedup_agreement", "dedup_bucket_stats",
-        "dedup_clusters", "dedup_cross", "dedup_embed", "dedup_keep",
-        "dedup_minhash", "split_leakage_safe").exists(selected.contains)) {
-        graft.operators.Dedup.pairFixtureWrite(spark, effDir); ()
-      }
-    // the persisted base band index for incremental MinHash maintenance —
-    // the timed query signs only the delta half and reads the base from
-    // storage, the posture a daily ingest actually runs
-    fixtures("dedup_base_fixture_s") =
-      timedFixture("dedup_base", selected.contains("dedup_incr_index")) {
-        graft.operators.Dedup.baseIndexWrite(spark, effDir); ()
-      }
-    // the corpus gram frames (positional + distinct) behind the five
-    // text/dedup gram consumers — parquet-backed storage posture measured
-    // against the executor-memory memo at ×100 (NOTES.md round 15)
-    fixtures("grams_fixture_s") =
-      timedFixture("grams", Seq("text_decontam", "text_decontam_bloom",
-        "dedup_spans", "text_novelty", "text_boilerplate")
-        .exists(selected.contains)) {
-        graft.operators.TextAnalysis.gramFixtureWrite(spark, effDir); ()
-      }
-    // the (doc, bigram) frame behind the LM pair — same one-time
-    // contract; the timed consumers score/aggregate over the served
-    // frame instead of re-running the corpus tokenize+explode
-    fixtures("bigrams_fixture_s") =
-      timedFixture("bigrams", Seq("text_bigram_lm", "text_predictability")
-        .exists(selected.contains)) {
-        graft.operators.TextAnalysis.bigramFixtureWrite(spark, effDir); ()
-      }
-    if (fixturesOnly) {
-      val (load1End, load5End) = loadAvg()
-      childOut match {
-        case Some(path) =>
-          val sidecar = sidecarJson(Seq.empty, Map.empty,
-            collection.Map.empty, collection.Map.empty, fixtures,
-            sfJson(sfDir, scale), 0.0, load1Start, load5Start, load1End,
-            load5End, -1.0, contended, waits, extraFields = "")
-          java.nio.file.Files.write(java.nio.file.Paths.get(path),
-            sidecar.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        case None => System.err.println(
-          "[bench] GRAFT_BENCH_FIXTURES_ONLY outside child mode: fixtures " +
-            "built, nothing to emit")
-      }
-      spark.stop()
-      return
-    }
+      })
+    } :+ ("corpus_fixture_s" -> corpusFixtureSecs)
     // Each query is timed BEST-OF-2: two independent passes, report the
     // min. A single pass conflates the query's cost with whatever the
     // host happened to be doing in that window — rounds 5-8 each spent
@@ -584,32 +285,7 @@ object Bench {
     // or the window saw no jiffies at all
     val stealPct = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val (runSteal0, runTotal0) = cpuJiffies()
-    // GRAFT_BENCH_GC_BETWEEN=1: a full GC in the UNTIMED gap before each
-    // query — it lets the ContextCleaner reap the previous query's
-    // shuffle files/broadcasts (cleanup keys off reference GC) so a
-    // heavy predecessor's multi-GB residue doesn't bill the next timed
-    // window. Experiment knob (round-17 in-run-tax bisects), default off.
-    val gcBetween = sys.env.get("GRAFT_BENCH_GC_BETWEEN").contains("1")
-    // Child-block warm pass: a fresh child JVM's C2 compiler is still
-    // warming Spark's core paths (scan, exchange, codegen driver) for the
-    // whole block — measured ~0.2–0.4 s of tax on EVERY sf0.1 query even
-    // on its second pass (bench_r18_sf01_multijvm1 vs _single1: +42 s
-    // across 184 queries, spread broadly, not block-fronted). One untimed
-    // pre-pass per query restores the warm posture every committed floor
-    // was measured in; its cost lands in the coordinator's off-clock
-    // jvm_overhead_s. Child-mode only (focused probes keep the exact
-    // round-17 shape their floor sidecars were measured in);
-    // GRAFT_BENCH_CHILD_WARMUP=0 opts out for A/B probes.
-    val warmPass = childOut.isDefined &&
-      !sys.env.get("GRAFT_BENCH_CHILD_WARMUP").contains("0")
     val passes = ordered.map { name =>
-      if (gcBetween) { System.gc(); Thread.sleep(500) }
-      if (warmPass) {
-        try exec(name)
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] warm pass $name failed: $e") }
-        Scratch.release(spark)
-      }
       val (s0, t0) = cpuJiffies()
       val p1 = timedPass(name)
       // don't pay for a second pass of a failing query — the failure is
@@ -627,9 +303,33 @@ object Bench {
       SessionMemos.releaseAfter(spark, name, selected)
       name -> (p1, p2)
     }
+    val (load1End, load5End) = loadAvg()
+    val (runSteal1, runTotal1) = cpuJiffies()
+    val runStealPct =
+      if (runSteal0 < 0 || runSteal1 < 0 || runTotal1 <= runTotal0) -1.0
+      else 100.0 * (runSteal1 - runSteal0).toDouble / (runTotal1 - runTotal0)
+    val loadFields =
+      s""""load1_start":${fmt(load1Start)},"load5_start":${fmt(load5Start)},""" +
+        s""""load1_end":${fmt(load1End)},"load5_end":${fmt(load5End)},""" +
+        s""""steal_pct_run":${"%.2f".formatLocal(java.util.Locale.ROOT, runStealPct)},""" +
+        s""""contended":$contended,"load_wait_s":${waits * 20}"""
+    emit(passes, storageAfter, stealPct, fixtureSecs, sfJson(sfDir, scale),
+      loadFields)
+    SessionMemos.releaseSession(spark)
+    spark.stop()
+  }
+
+  /** Print the two stdout contract lines and write the sidecar files. */
+  private def emit(passes: Seq[(String, (Double, Double))],
+      storageAfter: collection.Map[String, Double],
+      stealPct: collection.Map[String, Double],
+      fixtureSecs: Seq[(String, Double)], sf: String,
+      loadFields: String): Unit = {
     val results = passes.map { case (name, (p1, p2)) =>
       name -> (if (p1 < 0 || p2 < 0) -1.0 else math.min(p1, p2))
     }
+    val total = results.map(_._2).filter(_ >= 0).sum
+    val failedCount = results.count(_._2 < 0)
     // first-pass sum, reported beside the min-of-2 total: session memos
     // (ANN rankings, graph edges) are deliberately cross-query warm, so a
     // query's SECOND pass reads them and min-of-2 reports the warm cost —
@@ -637,97 +337,11 @@ object Bench {
     // codegen) actually lands. Publishing Σp1 keeps the cold-including
     // bound visible instead of laundering it through the min.
     val totalP1 = passes.map(_._2._1).filter(_ >= 0).sum
-    val (load1End, load5End) = loadAvg()
-    val (runSteal1, runTotal1) = cpuJiffies()
-    val runStealPct =
-      if (runSteal0 < 0 || runSteal1 < 0 || runTotal1 <= runTotal0) -1.0
-      else 100.0 * (runSteal1 - runSteal0).toDouble / (runTotal1 - runTotal0)
-    childOut match {
-      case Some(path) =>
-        // child contract: the full sidecar JSON to the coordinator's
-        // temp path, nothing to stdout, no bench_last.json/bench/ writes
-        val sidecar = sidecarJson(results, passes.toMap, storageAfter,
-          stealPct, fixtures, sfJson(sfDir, scale), totalP1,
-          load1Start, load5Start, load1End, load5End, runStealPct,
-          contended, waits, extraFields = "")
-        java.nio.file.Files.write(java.nio.file.Paths.get(path),
-          sidecar.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      case None =>
-        emit(results, passes.toMap, storageAfter, stealPct, fixtures,
-          sfJson(sfDir, scale), totalP1,
-          load1Start, load5Start, load1End, load5End, runStealPct,
-          contended, waits, extraFields = "")
-    }
-    // end-of-session memo teardown — see Dedup.releaseSession
-    graft.operators.Dedup.releaseSession(spark)
-    graft.operators.Similarity.releaseSession(spark)
-    graft.operators.Graph.releaseSession(spark)
-    graft.operators.TextAnalysis.releaseSession(spark)
-    graft.sources.Ingest.releaseSession(spark)
-    spark.stop()
-  }
-
-  private def loadFieldsJson(load1Start: Double, load5Start: Double,
-      load1End: Double, load5End: Double, runStealPct: Double,
-      contended: Boolean, waits: Int): String =
-    s""""load1_start":${fmt(load1Start)},"load5_start":${fmt(load5Start)},""" +
-      s""""load1_end":${fmt(load1End)},"load5_end":${fmt(load5End)},""" +
-      s""""steal_pct_run":${"%.2f".formatLocal(java.util.Locale.ROOT, runStealPct)},""" +
-      s""""contended":$contended,"load_wait_s":${waits * 20}"""
-
-  private def sidecarJson(results: Seq[(String, Double)],
-      passes: Map[String, (Double, Double)],
-      storageAfter: collection.Map[String, Double],
-      stealPct: collection.Map[String, Double],
-      fixtures: collection.Map[String, Double],
-      sf: String, totalP1: Double,
-      load1Start: Double, load5Start: Double, load1End: Double,
-      load5End: Double, runStealPct: Double, contended: Boolean,
-      waits: Int, extraFields: String): String = {
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val failedCount = results.count(_._2 < 0)
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
+    val passMap = passes.toMap
+    def perQuery(render: (String, Double) => String): String = results
+      .map { case (k, v) => "\"" + k + "\":" + render(k, v) }
       .mkString("{", ",", "}")
-    val raw = results.map { case (k, _) =>
-      val (p1, p2) = passes(k); s"\"" + k + s"\":[$p1,$p2]"
-    }.mkString("{", ",", "}")
-    val storageJson = results.map { case (k, _) =>
-      s"\"" + k + "\":" + "%.1f".formatLocal(java.util.Locale.ROOT,
-        storageAfter.getOrElse(k, -1.0))
-    }.mkString("{", ",", "}")
-    val stealJson = results.map { case (k, _) =>
-      s"\"" + k + "\":" + "%.2f".formatLocal(java.util.Locale.ROOT,
-        stealPct.getOrElse(k, -1.0))
-    }.mkString("{", ",", "}")
-    val fixtureJson = FixtureFields
-      .map(f => s"\"$f\":${fixtures.getOrElse(f, 0.0)}").mkString(",")
-    val loadFields = loadFieldsJson(load1Start, load5Start, load1End,
-      load5End, runStealPct, contended, waits)
-    s"""{"total_s":$total,"n":${results.size},"failed":$failedCount,"sf":$sf,"timing":"best_of_2","total_p1_s":$totalP1,$loadFields$extraFields,""" +
-      s"""$fixtureJson,""" +
-      s""""queries":$qs,"passes":$raw,"storage_after_mb":$storageJson,"steal_pct":$stealJson}"""
-  }
-
-  /** Print the two stdout contract lines and write the sidecar files —
-    * identical shape whether the run was one session or N child blocks.
-    */
-  private def emit(results: Seq[(String, Double)],
-      passes: Map[String, (Double, Double)],
-      storageAfter: collection.Map[String, Double],
-      stealPct: collection.Map[String, Double],
-      fixtures: collection.Map[String, Double],
-      sf: String, totalP1: Double,
-      load1Start: Double, load5Start: Double, load1End: Double,
-      load5End: Double, runStealPct: Double, contended: Boolean,
-      waits: Int, extraFields: String): Unit = {
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val failedCount = results.count(_._2 < 0)
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val loadFields = loadFieldsJson(load1Start, load5Start, load1End,
-      load5End, runStealPct, contended, waits)
-    val fixtureJson = FixtureFields
-      .map(f => s"\"$f\":${fmt(fixtures.getOrElse(f, 0.0))}").mkString(",")
+    val qs = perQuery((_, v) => fmt(v))
     // the long per-query line is INFORMATIONAL and goes FIRST: ten rounds
     // (BENCH_r01-r10) proved the driver keeps a bounded stdout TAIL and
     // the ~3 KB per-query map overflows it no matter the order — every
@@ -737,18 +351,28 @@ object Bench {
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":$sf}""")
     // the driver-contract line: summary-only (~180 bytes — no tail window
     // can clip it), per-query detail lives in the bench_last.json sidecar
+    val fixtureLine = fixtureSecs.map { case (f, v) => s"\"$f\":${fmt(v)}" }
+      .mkString(",")
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${
       results.size},"failed":$failedCount,"sf":$sf,"total_p1_s":${
-      fmt(totalP1)},$fixtureJson,$loadFields$extraFields}""")
+      fmt(totalP1)},$fixtureLine,$loadFields}""")
     System.out.flush()
     // sidecar file: BENCH_r07/r08 both captured "parsed": null because
     // the stdout tail clipped the per-query map mid-JSON. A file on disk
     // cannot be truncated by a capture window — write the full per-query
     // result (min + both raw passes) there as the durable record.
     try {
-      val sidecar = sidecarJson(results, passes, storageAfter, stealPct,
-        fixtures, sf, totalP1, load1Start, load5Start, load1End, load5End,
-        runStealPct, contended, waits, extraFields)
+      val raw = perQuery { (k, _) => val (p1, p2) = passMap(k); s"[$p1,$p2]" }
+      val storageJson = perQuery((k, _) =>
+        "%.1f".formatLocal(java.util.Locale.ROOT, storageAfter.getOrElse(k, -1.0)))
+      val stealJson = perQuery((k, _) =>
+        "%.2f".formatLocal(java.util.Locale.ROOT, stealPct.getOrElse(k, -1.0)))
+      val fixtureJson = fixtureSecs.map { case (f, v) => s"\"$f\":$v" }
+        .mkString(",")
+      val sidecar =
+        s"""{"total_s":$total,"n":${results.size},"failed":$failedCount,"sf":$sf,"timing":"best_of_2","total_p1_s":$totalP1,$loadFields,""" +
+          s"""$fixtureJson,""" +
+          s""""queries":$qs,"passes":$raw,"storage_after_mb":$storageJson,"steal_pct":$stealJson}"""
       java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_last.json"),
         sidecar.getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -91,10 +91,9 @@ object SessionMemos {
 
   /** [[benchOrder]] split into its ATOMIC units: each memo family's
     * selected consumers as one unit, every other query as a singleton.
-    * Concatenated, the units are exactly benchOrder. Bench's per-block
-    * JVM isolation (round 18) chunks these units — a family must never
-    * be split across JVMs, or its memo would build twice and the second
-    * half would bill a rebuild the single-JVM bench never paid.
+    * Concatenated, the units are exactly benchOrder. A caller that
+    * shuffles the run (the perfbench harness) moves whole units, so a
+    * family's memo builds once and is released after its own block.
     */
   def benchUnits(selected: Set[String]): Seq[Seq[String]] = {
     val emitted = scala.collection.mutable.LinkedHashSet.empty[String]
@@ -113,6 +112,18 @@ object SessionMemos {
       }
     }
     units.toSeq
+  }
+
+  /** End-of-session teardown of every session memo (pair frames,
+    * component labels, rankings, edges, gram frames, bucketed-table
+    * readiness) — Bench and Verify call this before `spark.stop()`.
+    */
+  def releaseSession(spark: SparkSession): Unit = {
+    operators.Dedup.releaseSession(spark)
+    operators.Similarity.releaseSession(spark)
+    operators.Graph.releaseSession(spark)
+    operators.TextAnalysis.releaseSession(spark)
+    sources.Ingest.releaseSession(spark)
   }
 
   /** Release every family whose LAST selected consumer (the end of its

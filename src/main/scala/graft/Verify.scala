@@ -47,14 +47,6 @@ object Verify {
     Scratch.release(spark)
   }
 
-  private def releaseMemos(spark: org.apache.spark.sql.SparkSession): Unit = {
-    operators.Dedup.releaseSession(spark)
-    operators.Similarity.releaseSession(spark)
-    operators.Graph.releaseSession(spark)
-    operators.TextAnalysis.releaseSession(spark)
-    sources.Ingest.releaseSession(spark)
-  }
-
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, only) = args match {
       case Array(a, b)        => (a, b, None)
@@ -101,7 +93,7 @@ object Verify {
       // the inline pass left session memos resident — tear them down so
       // the re-run rebuilds THROUGH the store (peek hits), the posture
       // the benches run
-      releaseMemos(spark)
+      SessionMemos.releaseSession(spark)
       obtainAll(spark, sfDir)
       val checked = posturedQueries.filter(n => only.forall(_.contains(n)))
       val verdicts = checked.map { name =>
@@ -130,7 +122,7 @@ object Verify {
     }
     // end-of-session memo teardown (pair frames, component labels,
     // bucketed-table readiness) — see Dedup.releaseSession
-    releaseMemos(spark)
+    SessionMemos.releaseSession(spark)
     spark.stop()
     // a posture divergence must fail the DRIVER-VISIBLE run, not hide in
     // stderr — the artifact gates both postures or it gates neither

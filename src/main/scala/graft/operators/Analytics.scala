@@ -552,13 +552,13 @@ object Analytics {
     * divergence in gap decisions or session bounds.
     */
   val sessionize: Q = Q("events_sessionize",
-    """WITH d AS (SELECT user_id, epoch_us(ts) AS tus, value FROM events),
-      |s AS (SELECT user_id, tus, value,
+    """WITH d AS (SELECT user_id, event_id, epoch_us(ts) AS tus, value FROM events),
+      |s AS (SELECT user_id, event_id, tus, value,
       |  CASE WHEN lag(tus) OVER w IS NULL
       |         OR tus - lag(tus) OVER w > 1800000000 THEN 1 ELSE 0 END AS brk
-      |  FROM d WINDOW w AS (PARTITION BY user_id ORDER BY tus)),
+      |  FROM d WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)),
       |t AS (SELECT user_id, tus, value,
-      |  CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY tus
+      |  CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY tus, event_id
       |                      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_no
       |  FROM s)
       |SELECT user_id, session_no, count(*) AS n_events,
@@ -646,9 +646,9 @@ object Analytics {
       |s AS (SELECT user_id, event_id, event_type, tus,
       |  CASE WHEN lag(tus) OVER w IS NULL
       |         OR tus - lag(tus) OVER w > 1800000000 THEN 1 ELSE 0 END AS brk
-      |  FROM d WINDOW w AS (PARTITION BY user_id ORDER BY tus)),
+      |  FROM d WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)),
       |t AS (SELECT user_id, event_id, event_type, tus,
-      |  CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY tus
+      |  CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY tus, event_id
       |                      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_no
       |  FROM s),
       |u AS (SELECT *, row_number() OVER (PARTITION BY user_id, session_no
@@ -698,13 +698,13 @@ object Analytics {
     * at streaming scale; nothing bespoke rides the plan.
     */
   val sessionBuiltin: Q = Q("events_session_builtin",
-    """WITH d AS (SELECT user_id, epoch_us(ts) AS tus FROM events),
-      |s AS (SELECT user_id, tus,
+    """WITH d AS (SELECT user_id, event_id, epoch_us(ts) AS tus FROM events),
+      |s AS (SELECT user_id, event_id, tus,
       |  CASE WHEN lag(tus) OVER w IS NULL
       |         OR tus - lag(tus) OVER w >= 1800000000 THEN 1 ELSE 0 END AS brk
-      |  FROM d WINDOW w AS (PARTITION BY user_id ORDER BY tus)),
+      |  FROM d WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)),
       |t AS (SELECT user_id, tus,
-      |  CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY tus
+      |  CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY tus, event_id
       |                      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sid
       |  FROM s)
       |SELECT user_id, CAST(min(tus) AS BIGINT) AS session_start_us,
@@ -728,8 +728,14 @@ object Analytics {
   /** Events with their 30-minute-gap session assignment — the shared
     * upstream of [[sessionize]], [[eventsConcurrency]] and
     * [[eventsTopPaths]] (one definition of "session", three consumers).
-    * Session numbering is tie-safe: equal-tus peers produce identical brk
-    * flags under any lag order, so the running sum is deterministic. */
+    * Tied events are never split across sessions: within a run of
+    * equal-tus rows only the FIRST can get brk=1 (the rest see a zero
+    * gap), and both windows read that first row's position from ONE sort,
+    * so every tied row's running sum includes it. The sum must walk the
+    * same tie order the lag walked — the declared SQL therefore orders
+    * both windows by (tus, event_id); two independently sorted windows
+    * can put a brk=0 peer before its brk=1 twin and leave it in the
+    * previous session (observed on the ×10z corpus, AnalyticsSpec). */
   private def sessionEvents(s: SparkSession, dir: String): DataFrame = {
     // The windows order by the MATERIALIZED tus column, never the
     // nanos→micros expression: ordering by the expression makes Spark
@@ -1286,13 +1292,13 @@ object Analytics {
   private val MinuteMicros = 60000000L
 
   val eventsConcurrency: Q = Q("events_concurrency",
-    s"""WITH d AS (SELECT user_id, epoch_us(ts) AS tus FROM events),
-      |s AS (SELECT user_id, tus,
+    s"""WITH d AS (SELECT user_id, event_id, epoch_us(ts) AS tus FROM events),
+      |s AS (SELECT user_id, event_id, tus,
       |  CASE WHEN lag(tus) OVER w IS NULL
       |         OR tus - lag(tus) OVER w > 1800000000 THEN 1 ELSE 0 END AS brk
-      |  FROM d WINDOW w AS (PARTITION BY user_id ORDER BY tus)),
+      |  FROM d WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)),
       |t AS (SELECT user_id, tus,
-      |  CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY tus
+      |  CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY tus, event_id
       |                      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_no
       |  FROM s),
       |sess AS (SELECT user_id, session_no, min(tus) AS st, max(tus) AS en
@@ -1340,9 +1346,9 @@ object Analytics {
       |s AS (SELECT user_id, event_id, event_type, tus,
       |  CASE WHEN lag(tus) OVER w IS NULL
       |         OR tus - lag(tus) OVER w > 1800000000 THEN 1 ELSE 0 END AS brk
-      |  FROM d WINDOW w AS (PARTITION BY user_id ORDER BY tus)),
+      |  FROM d WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)),
       |t AS (SELECT user_id, event_id, event_type, tus,
-      |  CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY tus
+      |  CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY tus, event_id
       |                      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_no
       |  FROM s),
       |p AS (SELECT user_id, session_no,

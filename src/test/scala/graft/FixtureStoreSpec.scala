@@ -1,21 +1,32 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The cross-session fixture store contract: one build per corpus version,
   * rediscovery across processes by content stamp, rebuild on data change,
   * and stale-version reaping. Pure filesystem tests — the store itself
   * never runs Spark (builders do; here the builder just writes a marker).
   */
-class FixtureStoreSpec extends AnyFunSuite {
+class FixtureStoreSpec extends SparkSpec {
 
   /** A fake corpus dir holding one "table" file the stamp walks. */
   private def corpus(tag: String): String = {
-    val d = Files.createTempDirectory(s"graft_fxspec_$tag")
+    val d = Paths.get(suiteTempDir(s"graft_fxspec_$tag"))
     Files.writeString(d.resolve("documents.parquet"), "rows")
     d.toString
   }
+
+  // the store roots and pins keyed on these corpora go with them
+  override def afterAll(): Unit =
+    try {
+      val base = Paths.get(System.getProperty("java.io.tmpdir"), "graft_fx")
+      Seq(base, base.resolve(".pins")).filter(Files.isDirectory(_)).foreach { d =>
+        val s = Files.list(d)
+        try s.filter(_.getFileName.toString.contains("_graft_fxspec_"))
+          .forEach(p => SparkSpec.deleteRecursively(p))
+        finally s.close()
+      }
+    } finally super.afterAll()
 
   test("one build per corpus version; memo and on-disk rediscovery both skip the builder") {
     val dir = corpus("reuse")

@@ -39,6 +39,22 @@ class SessionMemosSpec extends AnyFunSuite {
     }
   }
 
+  test("every family's consumers trigger its Bench fixture row") {
+    SessionMemos.families.foreach { fam =>
+      val row = Bench.fixtures.find(_.field == s"${fam.name}_fixture_s")
+      assert(row.nonEmpty, s"no Bench fixture row for family '${fam.name}'")
+      // a consumer missing from the triggers would build the family's
+      // fixture inside its first timed pass when selected alone
+      assert(row.get.triggers === fam.consumers, fam.name)
+    }
+    // every trigger is a registered query, every field distinct
+    val fields = Bench.fixtures.map(_.field)
+    assert(fields.distinct === fields)
+    Bench.fixtures.foreach { fx =>
+      assert(fx.triggers.subsetOf(SparkEntry.queries.keySet), fx.field)
+    }
+  }
+
   test("benchUnits concatenation is benchOrder, units are family-atomic") {
     val selected = SparkEntry.queries.keySet
     val units = SessionMemos.benchUnits(selected)

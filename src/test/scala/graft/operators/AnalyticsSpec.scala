@@ -302,7 +302,7 @@ class AnalyticsSpec extends SparkSpec {
   }
 
   /** Write a synthetic events table (declared schema, int64-nanos ts) with
-    * one event per (type, hour, ordinal) to a fresh temp dir, so the
+    * one event per (type, hour, ordinal) to a fresh suite temp dir, so the
     * data-dependent capability assertions below don't hinge on whether the
     * driver's regenerated corpus happens to contain spikes or silent
     * hours (round 8 regeneration had neither at sf0.001).
@@ -315,7 +315,7 @@ class AnalyticsSpec extends SparkSpec {
       j <- 0 until n
     } yield (i * 10000L + j, hour * HourNanos + j * 1000000L, j.toLong,
       tpe, 1.0, "{}")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-events").toString
+    val tmp = suiteTempDir("graft-events")
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.parquet(s"$tmp/events.parquet")
     tmp
@@ -409,12 +409,47 @@ class AnalyticsSpec extends SparkSpec {
       (2L, 1000L * S - 7200L * S, 1L, "view", 1.0, "{}"), // 2 h late
       (3L, 500L * S, 2L, "view", 1.0, "{}"),
       (4L, 600L * S, 2L, "view", 1.0, "{}"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-late").toString
-    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.parquet(s"$tmp/events.parquet")
-    val got = Analytics.eventsLateness.run(spark, tmp)
-      .as[(String, Long)].collect().toMap
-    assert(got === Map("in_order" -> 3L, "lt_1m" -> 1L, "ge_1h" -> 1L))
+    withTempDir("graft-late") { tmp =>
+      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .write.parquet(s"$tmp/events.parquet")
+      val got = Analytics.eventsLateness.run(spark, tmp)
+        .as[(String, Long)].collect().toMap
+      assert(got === Map("in_order" -> 3L, "lt_1m" -> 1L, "ge_1h" -> 1L))
+    }
+  }
+
+  test("tied timestamps at a session break stay in one session") {
+    import spark.implicits._
+    val M = 60L * 1000000000L // ns per minute
+    // user 1: one event at minute 10, then a 31-minute gap into three
+    // events TIED at minute 41 and one at minute 43 — sessions {10} and
+    // {41, 41, 41, 43}. Spark's sort may put any tied peer first; the
+    // peer with brk=1 must still open the session for all three.
+    val rows = Seq(
+      (0L, 10L * M, 1L, "view", 1.0, "{}"),
+      (7L, 41L * M, 1L, "click", 2.0, "{}"),
+      (3L, 41L * M, 1L, "view", 3.0, "{}"),
+      (5L, 41L * M, 1L, "click", 4.0, "{}"),
+      (1L, 43L * M, 1L, "purchase", 5.0, "{}"))
+    withTempDir("graft-ties") { tmp =>
+      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .repartition(3).write.parquet(s"$tmp/events.parquet")
+      val sessions = SparkEntry.queries("events_sessionize")(spark, tmp)
+        .select($"session_no", $"n_events").as[(Long, Long)].collect().toSeq
+      assert(sessions === Seq((1L, 1L), (2L, 4L)))
+      val active = SparkEntry.queries("events_concurrency")(spark, tmp)
+        .as[(Long, Long)].collect().toSeq
+      assert(active === Seq((10L, 1L), (11L, 0L), (41L, 1L), (44L, 0L)))
+    }
+    // the declared SQL of every consumer of the session definition walks
+    // both windows in one total order, so DuckDB cannot sort the tied
+    // peers differently for the lag and the running sum
+    Seq("events_sessionize", "events_session_builtin", "events_sequences",
+      "events_concurrency", "events_top_paths").foreach { name =>
+      val sql = SparkEntry.oracleSql(name)
+      assert(sql.contains("WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)"), name)
+      assert(sql.contains("sum(brk) OVER (PARTITION BY user_id ORDER BY tus, event_id"), name)
+    }
   }
 
   test("events_resample zero-fills constructed silent hours") {

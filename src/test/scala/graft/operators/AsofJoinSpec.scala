@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -21,7 +19,7 @@ class AsofJoinSpec extends SparkSpec {
 
   // orders: user 1 at 10:00 and 12:00; user 2 at 10:00; user 3 none
   private lazy val dir: String = {
-    val tmp = Files.createTempDirectory("graft-asof").toString
+    val tmp = suiteTempDir("graft-asof")
     val base = java.time.Instant.parse("2024-01-01T10:00:00Z")
     def ts(offsetMicros: Long) =
       new java.sql.Timestamp(base.toEpochMilli + offsetMicros / 1000)
@@ -95,55 +93,56 @@ class AsofJoinSpec extends SparkSpec {
     // NULL user/event_id/ts events, NULL custkey and NULL date orders,
     // duplicate timestamps (a pileup at one instant, the Zipf-gate shape),
     // duplicate orderkeys, and a user with events but no orders
-    val tmp = Files.createTempDirectory("graft-rangejoin").toString
-    val base = java.time.Instant.parse("2024-01-01T10:00:00Z")
-    def ts(offsetMicros: Long) =
-      new java.sql.Timestamp(base.toEpochMilli + offsetMicros / 1000)
-    Seq[(java.lang.Long, java.lang.Long, String, java.lang.Double, java.sql.Timestamp, String)](
-      (301L, 1L, "O", 1.0, ts(0), "1-URGENT"),
-      (302L, 1L, "O", 1.0, ts(0), "1-URGENT"), // same user, same date twice
-      (301L, 1L, "O", 1.0, ts(2 * H), "1-URGENT"), // DUPLICATE orderkey
-      (303L, null, "O", 1.0, ts(0), "1-URGENT"), // NULL custkey → 0
-      (304L, 2L, "O", 1.0, null, "1-URGENT"), //    NULL date → 0
-      (305L, 9L, "O", 1.0, ts(0), "1-URGENT")) //   user with no events
-      .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        "o_orderdate", "o_orderpriority")
-      .write.parquet(s"$tmp/orders.parquet")
-    val baseNanos = base.toEpochMilli * 1000000L
-    def nanos(offsetMicros: Long) = baseNanos + offsetMicros * 1000L
-    Seq[(java.lang.Long, java.lang.Long, java.lang.Long, String, java.lang.Double, String)](
-      (1L, nanos(0), 1L, "t", 1.0, "{}"), //  == order instant (inclusive)
-      (2L, nanos(0), 1L, "t", 1.0, "{}"), //  pileup at the same instant
-      (3L, nanos(0), 1L, "t", 1.0, "{}"),
-      (4L, nanos(24 * H - 1), 1L, "t", 1.0, "{}"), // inside first window
-      (5L, nanos(24 * H), 1L, "t", 1.0, "{}"), //     exclusive bound
-      (null, nanos(1), 1L, "t", 1.0, "{}"), // NULL event_id — not counted
-      (6L, null, 1L, "t", 1.0, "{}"), //      NULL ts — never matches
-      (7L, nanos(0), null, "t", 1.0, "{}"), //NULL user — never matches
-      (8L, nanos(0), 5L, "t", 1.0, "{}")) //  user with no orders
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.parquet(s"$tmp/events.parquet")
+    withTempDir("graft-rangejoin") { tmp =>
+      val base = java.time.Instant.parse("2024-01-01T10:00:00Z")
+      def ts(offsetMicros: Long) =
+        new java.sql.Timestamp(base.toEpochMilli + offsetMicros / 1000)
+      Seq[(java.lang.Long, java.lang.Long, String, java.lang.Double, java.sql.Timestamp, String)](
+        (301L, 1L, "O", 1.0, ts(0), "1-URGENT"),
+        (302L, 1L, "O", 1.0, ts(0), "1-URGENT"), // same user, same date twice
+        (301L, 1L, "O", 1.0, ts(2 * H), "1-URGENT"), // DUPLICATE orderkey
+        (303L, null, "O", 1.0, ts(0), "1-URGENT"), // NULL custkey → 0
+        (304L, 2L, "O", 1.0, null, "1-URGENT"), //    NULL date → 0
+        (305L, 9L, "O", 1.0, ts(0), "1-URGENT")) //   user with no events
+        .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
+          "o_orderdate", "o_orderpriority")
+        .write.parquet(s"$tmp/orders.parquet")
+      val baseNanos = base.toEpochMilli * 1000000L
+      def nanos(offsetMicros: Long) = baseNanos + offsetMicros * 1000L
+      Seq[(java.lang.Long, java.lang.Long, java.lang.Long, String, java.lang.Double, String)](
+        (1L, nanos(0), 1L, "t", 1.0, "{}"), //  == order instant (inclusive)
+        (2L, nanos(0), 1L, "t", 1.0, "{}"), //  pileup at the same instant
+        (3L, nanos(0), 1L, "t", 1.0, "{}"),
+        (4L, nanos(24 * H - 1), 1L, "t", 1.0, "{}"), // inside first window
+        (5L, nanos(24 * H), 1L, "t", 1.0, "{}"), //     exclusive bound
+        (null, nanos(1), 1L, "t", 1.0, "{}"), // NULL event_id — not counted
+        (6L, null, 1L, "t", 1.0, "{}"), //      NULL ts — never matches
+        (7L, nanos(0), null, "t", 1.0, "{}"), //NULL user — never matches
+        (8L, nanos(0), 5L, "t", 1.0, "{}")) //  user with no orders
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .write.parquet(s"$tmp/events.parquet")
 
-    val orders = graft.sources.Tables.load(spark, tmp, "orders").select(
-      $"o_orderkey", $"o_custkey",
-      org.apache.spark.sql.functions.unix_micros($"o_orderdate").as("t0"))
-    val events = graft.sources.Tables.load(spark, tmp, "events").select(
-      $"user_id", $"event_id", graft.sources.Tables.nanosToMicros("ts").as("et"))
-    val expect = orders.join(events,
-        $"user_id" === $"o_custkey" &&
-          $"et" >= $"t0" && $"et" < $"t0" + 86400L * 1000000L, "left")
-      .groupBy($"o_orderkey")
-      .agg(org.apache.spark.sql.functions.count($"event_id").as("n"))
-      .as[(Long, Long)].collect().toMap
-    val got = AsofJoin.rangeJoin.run(spark, tmp)
-      .as[(Long, Long)].collect().toMap
-    assert(got === expect)
-    // the boundary arithmetic binds on this fixture — pin the key rows
-    assert(got(302L) === 4L) // 3 pileup events + the 24h−1µs one
-    assert(got(301L) === 6L) // duplicate orderkey: both orders' counts sum
-    assert(got(303L) === 0L)
-    assert(got(304L) === 0L)
-    assert(got(305L) === 0L)
+      val orders = graft.sources.Tables.load(spark, tmp, "orders").select(
+        $"o_orderkey", $"o_custkey",
+        org.apache.spark.sql.functions.unix_micros($"o_orderdate").as("t0"))
+      val events = graft.sources.Tables.load(spark, tmp, "events").select(
+        $"user_id", $"event_id", graft.sources.Tables.nanosToMicros("ts").as("et"))
+      val expect = orders.join(events,
+          $"user_id" === $"o_custkey" &&
+            $"et" >= $"t0" && $"et" < $"t0" + 86400L * 1000000L, "left")
+        .groupBy($"o_orderkey")
+        .agg(org.apache.spark.sql.functions.count($"event_id").as("n"))
+        .as[(Long, Long)].collect().toMap
+      val got = AsofJoin.rangeJoin.run(spark, tmp)
+        .as[(Long, Long)].collect().toMap
+      assert(got === expect)
+      // the boundary arithmetic binds on this fixture — pin the key rows
+      assert(got(302L) === 4L) // 3 pileup events + the 24h−1µs one
+      assert(got(301L) === 6L) // duplicate orderkey: both orders' counts sum
+      assert(got(303L) === 0L)
+      assert(got(304L) === 0L)
+      assert(got(305L) === 0L)
+    }
   }
 
   test("range_join never joins events against orders — one window pass instead") {

@@ -57,14 +57,15 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("empty documents yield zero frames instead of crashing") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-media").toString
-    Seq((0L, "", "en", "s", 0L), (1L, "abcdef", "en", "s", 6L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.parquet(s"$tmp/documents.parquet")
-    val rows = Multimodal.mediaFrames.run(spark, tmp)
-      .select($"doc_id").as[Long].collect()
-    // doc 0 (empty payload → 0 frames) contributes no rows; doc 1 does
-    assert(rows.toSet === Set(1L))
+    withTempDir("graft-media") { tmp =>
+      Seq((0L, "", "en", "s", 0L), (1L, "abcdef", "en", "s", 6L))
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.parquet(s"$tmp/documents.parquet")
+      val rows = Multimodal.mediaFrames.run(spark, tmp)
+        .select($"doc_id").as[Long].collect()
+      // doc 0 (empty payload → 0 frames) contributes no rows; doc 1 does
+      assert(rows.toSet === Set(1L))
+    }
   }
 
   test("frame sampling covers every 4th frame with correct tail size") {

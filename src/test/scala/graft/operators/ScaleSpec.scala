@@ -40,51 +40,57 @@ class ScaleSpec extends SparkSpec {
 
   test("dynamic partition pruning: a dim-side filter prunes fact partitions at runtime") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft-dpp").toString + "/events"
-    Ingest.writeParquet(
-      Tables.load(spark, sf("sf0.001"), "events")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type")),
-      out, partitionBy = Seq("event_type"))
-    // the partition-key filter lives on the DIMENSION side only — static
-    // pruning can't see it; DPP must inject a runtime subquery filter into
-    // the fact scan (the mechanism that keeps a partitioned 100 TB fact
-    // from being read whole when the dim filter selects one partition)
-    // the dim must be a FILE relation: an in-memory LocalRelation folds the
-    // channel filter away, and DPP only fires when the build side carries a
-    // visible selective predicate
-    val dimPath = Files.createTempDirectory("graft-dpp-dim").toString + "/dim"
-    Seq(("click", "web"), ("view", "web"), ("purchase", "checkout"))
-      .toDF("event_type", "channel").write.parquet(dimPath)
-    val prev = spark.conf.get("spark.sql.optimizer.dynamicPartitionPruning.useStats")
-    // tiny test tables have no stats worth trusting — force the decision
-    // on the filter-ratio heuristic so the test models the large-fact case
-    spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
-    try {
-      val joined = spark.read.parquet(out)
-        .join(spark.read.parquet(dimPath).filter(col("channel") === "checkout"),
-          Seq("event_type"))
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("dynamicpruningexpression"),
-        s"no DPP filter injected into the fact scan:\n$plan")
-      assert(joined.count() > 0)
-    } finally
-      spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", prev)
+    withTempDir("graft-dpp") { base =>
+      val out = s"$base/events"
+      Ingest.writeParquet(
+        Tables.load(spark, sf("sf0.001"), "events")
+          .select(col("event_id"), col("user_id"), col("value"), col("event_type")),
+        out, partitionBy = Seq("event_type"))
+      // the partition-key filter lives on the DIMENSION side only — static
+      // pruning can't see it; DPP must inject a runtime subquery filter into
+      // the fact scan (the mechanism that keeps a partitioned 100 TB fact
+      // from being read whole when the dim filter selects one partition)
+      // the dim must be a FILE relation: an in-memory LocalRelation folds the
+      // channel filter away, and DPP only fires when the build side carries a
+      // visible selective predicate
+      withTempDir("graft-dpp-dim") { dimBase =>
+        val dimPath = s"$dimBase/dim"
+        Seq(("click", "web"), ("view", "web"), ("purchase", "checkout"))
+          .toDF("event_type", "channel").write.parquet(dimPath)
+        val prev = spark.conf.get("spark.sql.optimizer.dynamicPartitionPruning.useStats")
+        // tiny test tables have no stats worth trusting — force the decision
+        // on the filter-ratio heuristic so the test models the large-fact case
+        spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
+        try {
+          val joined = spark.read.parquet(out)
+            .join(spark.read.parquet(dimPath).filter(col("channel") === "checkout"),
+              Seq("event_type"))
+          val plan = joined.queryExecution.executedPlan.toString
+          assert(plan.contains("dynamicpruningexpression"),
+            s"no DPP filter injected into the fact scan:\n$plan")
+          assert(joined.count() > 0)
+        } finally
+          spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", prev)
+      }
+    }
   }
 
   test("partitioned layout prunes non-matching partitions at the scan") {
-    val out = Files.createTempDirectory("graft-part").toString + "/events"
-    Ingest.writeParquet(
-      Tables.load(spark, sf("sf0.001"), "events")
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type")),
-      out, partitionBy = Seq("event_type"))
-    val one = spark.read.parquet(out).filter(col("event_type") === "click")
-    val scan = one.queryExecution.executedPlan.toString
-    // the filter lands in PartitionFilters (directory pruning), not as a
-    // row-level data filter
-    assert(scan.contains("PartitionFilters: [isnotnull(event_type"), scan)
-    assert(one.count() > 0)
-    val nTypes = Tables.load(spark, sf("sf0.001"), "events")
-      .select(col("event_type")).distinct().count()
-    assert(nTypes > 1) // pruning actually skipped sibling directories
+    withTempDir("graft-part") { base =>
+      val out = s"$base/events"
+      Ingest.writeParquet(
+        Tables.load(spark, sf("sf0.001"), "events")
+          .select(col("event_id"), col("user_id"), col("value"), col("event_type")),
+        out, partitionBy = Seq("event_type"))
+      val one = spark.read.parquet(out).filter(col("event_type") === "click")
+      val scan = one.queryExecution.executedPlan.toString
+      // the filter lands in PartitionFilters (directory pruning), not as a
+      // row-level data filter
+      assert(scan.contains("PartitionFilters: [isnotnull(event_type"), scan)
+      assert(one.count() > 0)
+      val nTypes = Tables.load(spark, sf("sf0.001"), "events")
+        .select(col("event_type")).distinct().count()
+      assert(nTypes > 1) // pruning actually skipped sibling directories
+    }
   }
 }

@@ -13,7 +13,7 @@ class IngestSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private lazy val tmp = Files.createTempDirectory("graft-ingest").toString
+  private lazy val tmp = suiteTempDir("graft-ingest")
 
   private val csvSchema = StructType(Seq(
     StructField("date", StringType),

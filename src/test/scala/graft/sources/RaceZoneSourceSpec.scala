@@ -13,7 +13,7 @@ class RaceZoneSourceSpec extends SparkSpec {
   private val Fmt = "graft.sources.racezone.RaceZoneSource"
 
   private def writeZone(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-racezone").toString
+    val dir = suiteTempDir("graft-racezone")
     def race(year: Int, round: Int, name: String, city: String): Unit = {
       val json =
         s"""{"season":"$year","round":"$round","raceName":"$name",
@@ -137,37 +137,38 @@ class RaceZoneSourceSpec extends SparkSpec {
     // SupportsRuntimeFiltering hook). The dim must be FILE-backed: a
     // local Seq collapses to a LocalRelation at constant folding, and
     // PartitionPruning requires a live selective Filter on the dim plan.
-    val dimPath = java.nio.file.Files.createTempDirectory("graft-rzdim")
-      .toString + "/dim"
-    Seq((2022, "keep"), (2023, "keep"), (2024, "drop"))
-      .toDF("y", "tag").write.parquet(dimPath)
-    val dim = spark.read.parquet(dimPath).filter($"tag" === "keep")
-    val fact = spark.read.format(Fmt).load(dir)
-      .select($"year", $"raceName") // content column → survivors must open
-    // broadcast the DIM explicitly: the zone's own reported stats are
-    // broadcast-small at spec scale, so Spark would otherwise broadcast
-    // the FACT side — and DPP (reuseBroadcastOnly default) only injects
-    // when the filtering side's broadcast exists to reuse. At real zone
-    // scale the stats make this the natural shape without the hint.
-    val joined = fact.join(org.apache.spark.sql.functions.broadcast(dim),
-        $"year" === $"y")
-      .select($"year", $"raceName", $"tag")
-    val rows = joined.collect()
-    // correctness first: exactly the 2022+2023 races survive the join
-    assert(rows.length === 4)
-    assert(rows.map(_.getInt(0)).toSet === Set(2022, 2023))
-    // the scan carries an injected dynamic-pruning runtime filter
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(plan.contains("dynamicpruning"),
-      s"no runtime filter reached the racezone scan:\n$plan")
-    // and the pruned file (2024) was never OPENED: the runtime filter
-    // dropped its partition before any reader was scheduled — the
-    // execution-time twin of the planning-time pushdown test above
-    val paths = java.util.Collections.list(new java.util.Vector(
-      RaceZone.opened).elements()).toArray.map(String.valueOf).toSet
-    assert(paths.nonEmpty, "expected the surviving files to open")
-    assert(!paths.exists(_.contains("races_2024_")),
-      s"runtime-pruned file was opened: $paths")
+    withTempDir("graft-rzdim") { base =>
+      val dimPath = s"$base/dim"
+      Seq((2022, "keep"), (2023, "keep"), (2024, "drop"))
+        .toDF("y", "tag").write.parquet(dimPath)
+      val dim = spark.read.parquet(dimPath).filter($"tag" === "keep")
+      val fact = spark.read.format(Fmt).load(dir)
+        .select($"year", $"raceName") // content column → survivors must open
+      // broadcast the DIM explicitly: the zone's own reported stats are
+      // broadcast-small at spec scale, so Spark would otherwise broadcast
+      // the FACT side — and DPP (reuseBroadcastOnly default) only injects
+      // when the filtering side's broadcast exists to reuse. At real zone
+      // scale the stats make this the natural shape without the hint.
+      val joined = fact.join(org.apache.spark.sql.functions.broadcast(dim),
+          $"year" === $"y")
+        .select($"year", $"raceName", $"tag")
+      val rows = joined.collect()
+      // correctness first: exactly the 2022+2023 races survive the join
+      assert(rows.length === 4)
+      assert(rows.map(_.getInt(0)).toSet === Set(2022, 2023))
+      // the scan carries an injected dynamic-pruning runtime filter
+      val plan = joined.queryExecution.executedPlan.toString
+      assert(plan.contains("dynamicpruning"),
+        s"no runtime filter reached the racezone scan:\n$plan")
+      // and the pruned file (2024) was never OPENED: the runtime filter
+      // dropped its partition before any reader was scheduled — the
+      // execution-time twin of the planning-time pushdown test above
+      val paths = java.util.Collections.list(new java.util.Vector(
+        RaceZone.opened).elements()).toArray.map(String.valueOf).toSet
+      assert(paths.nonEmpty, "expected the surviving files to open")
+      assert(!paths.exists(_.contains("races_2024_")),
+        s"runtime-pruned file was opened: $paths")
+    }
   }
 
   test("the opened record is genuinely bounded: drop-oldest past the cap") {

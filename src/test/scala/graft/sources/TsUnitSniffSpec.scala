@@ -69,7 +69,7 @@ class TsUnitSniffSpec extends SparkSpec {
   }
 
   private def tmp(): java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft-tsunit")
+    java.nio.file.Paths.get(suiteTempDir("graft-tsunit"))
 
   private def tsAnn(unit: TimeUnit): LogicalTypeAnnotation =
     LogicalTypeAnnotation.timestampType(true, unit)

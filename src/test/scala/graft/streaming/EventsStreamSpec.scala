@@ -149,39 +149,40 @@ class EventsStreamSpec extends SparkSpec {
 
   test("sessionWindowStream survives a checkpoint restart: open sessions restore and extend") {
     implicit val sq = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft-swin-ck").toString
-    val landing = s"$tmp/landing"; val ck = s"$tmp/ck"; val out = s"$tmp/out"
-    def land(rows: EventsStream.Event*): Unit =
-      rows.toSeq.toDF().write.mode("append").parquet(landing)
-    def start() = EventsStream.sessionWindowStream(
-        spark.readStream.schema(
-          "ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE")
-          .parquet(landing))
-      .writeStream.outputMode(OutputMode.Append)
-      .option("checkpointLocation", ck)
-      .format("parquet").option("path", out)
-      .start()
-    // run 1: open a session for user 1, then stop mid-session
-    land(EventsStream.Event(ts(0, 10), 1L, "click", 1.0))
-    val q1 = start()
-    try q1.processAllAvailable() finally q1.stop()
-    // while down: an event EXTENDING the open session lands, plus a
-    // far-future flush that will close everything on restart
-    land(EventsStream.Event(ts(10, 0), 1L, "view", 1.0))
-    land(EventsStream.Event(
-      Timestamp.valueOf("2024-01-01 12:00:00"), 99L, "flush", 0.0))
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    val got = spark.read.parquet(out)
-      .as[(Long, Long, Long, Long)].collect().toSet
-    // the restored state merged both events into ONE session — a lost
-    // checkpoint would emit a fragment per run
-    val batch = EventsStream.sessionWindowStream(Seq(
-        EventsStream.Event(ts(0, 10), 1L, "click", 1.0),
-        EventsStream.Event(ts(10, 0), 1L, "view", 1.0)).toDF())
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(got === batch, s"restart must merge into the batch sessions: $got")
-    assert(got.exists { case (u, _, _, n) => u == 1L && n == 2L })
+    withTempDir("graft-swin-ck") { tmp =>
+      val landing = s"$tmp/landing"; val ck = s"$tmp/ck"; val out = s"$tmp/out"
+      def land(rows: EventsStream.Event*): Unit =
+        rows.toSeq.toDF().write.mode("append").parquet(landing)
+      def start() = EventsStream.sessionWindowStream(
+          spark.readStream.schema(
+            "ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE")
+            .parquet(landing))
+        .writeStream.outputMode(OutputMode.Append)
+        .option("checkpointLocation", ck)
+        .format("parquet").option("path", out)
+        .start()
+      // run 1: open a session for user 1, then stop mid-session
+      land(EventsStream.Event(ts(0, 10), 1L, "click", 1.0))
+      val q1 = start()
+      try q1.processAllAvailable() finally q1.stop()
+      // while down: an event EXTENDING the open session lands, plus a
+      // far-future flush that will close everything on restart
+      land(EventsStream.Event(ts(10, 0), 1L, "view", 1.0))
+      land(EventsStream.Event(
+        Timestamp.valueOf("2024-01-01 12:00:00"), 99L, "flush", 0.0))
+      val q2 = start()
+      try q2.processAllAvailable() finally q2.stop()
+      val got = spark.read.parquet(out)
+        .as[(Long, Long, Long, Long)].collect().toSet
+      // the restored state merged both events into ONE session — a lost
+      // checkpoint would emit a fragment per run
+      val batch = EventsStream.sessionWindowStream(Seq(
+          EventsStream.Event(ts(0, 10), 1L, "click", 1.0),
+          EventsStream.Event(ts(10, 0), 1L, "view", 1.0)).toDF())
+        .as[(Long, Long, Long, Long)].collect().toSet
+      assert(got === batch, s"restart must merge into the batch sessions: $got")
+      assert(got.exists { case (u, _, _, n) => u == 1L && n == 2L })
+    }
   }
 
   test("sketchStream registers match the batch sketch over the same events") {
@@ -338,29 +339,30 @@ class EventsStreamSpec extends SparkSpec {
 
   test("run() streams a growing parquet directory into aggregated parquet") {
     import org.apache.spark.sql.functions.lit
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream").toString
-    val eventsDir = s"$tmp/events"; val outDir = s"$tmp/out"; val ck = s"$tmp/ck"
-    // land a first micro-batch file in the production layout: ts as int64
-    // NANOS (the engine's events.parquet carries TIMESTAMP(NANOS), read
-    // repo-wide as raw longs via nanosAsLong)
-    def landing(events: Seq[EventsStream.Event]) = events.toDF()
-      .withColumn("ts", org.apache.spark.sql.functions.expr("unix_micros(ts) * 1000"))
-    landing(Seq(EventsStream.Event(ts(0, 10), 1L, "click", 1.0),
-      EventsStream.Event(ts(2, 0), 2L, "click", 2.0)))
-      .write.parquet(eventsDir)
-    val query = EventsStream.run(spark, eventsDir, outDir, ck)
-    try {
-      query.processAllAvailable()
-      // land a second file far past the watermark → closes the first window
-      landing(Seq(EventsStream.Event(ts(20, 0), 3L, "view", 9.0)))
-        .write.mode("append").parquet(eventsDir)
-      query.processAllAvailable()
-      val out = spark.read.parquet(outDir)
-      assert(out.columns.toSeq ===
-        Seq("bucket_start", "event_type", "n", "sum_value"))
-      val closed = out.filter(lit(true)).collect()
-      assert(closed.exists(r => r.getString(1) == "click" && r.getLong(2) == 2L))
-    } finally query.stop()
+    withTempDir("graft-stream") { tmp =>
+      val eventsDir = s"$tmp/events"; val outDir = s"$tmp/out"; val ck = s"$tmp/ck"
+      // land a first micro-batch file in the production layout: ts as int64
+      // NANOS (the engine's events.parquet carries TIMESTAMP(NANOS), read
+      // repo-wide as raw longs via nanosAsLong)
+      def landing(events: Seq[EventsStream.Event]) = events.toDF()
+        .withColumn("ts", org.apache.spark.sql.functions.expr("unix_micros(ts) * 1000"))
+      landing(Seq(EventsStream.Event(ts(0, 10), 1L, "click", 1.0),
+        EventsStream.Event(ts(2, 0), 2L, "click", 2.0)))
+        .write.parquet(eventsDir)
+      val query = EventsStream.run(spark, eventsDir, outDir, ck)
+      try {
+        query.processAllAvailable()
+        // land a second file far past the watermark → closes the first window
+        landing(Seq(EventsStream.Event(ts(20, 0), 3L, "view", 9.0)))
+          .write.mode("append").parquet(eventsDir)
+        query.processAllAvailable()
+        val out = spark.read.parquet(outDir)
+        assert(out.columns.toSeq ===
+          Seq("bucket_start", "event_type", "n", "sum_value"))
+        val closed = out.filter(lit(true)).collect()
+        assert(closed.exists(r => r.getString(1) == "click" && r.getLong(2) == 2L))
+      } finally query.stop()
+    }
   }
 
   test("run() starts against an empty landing dir and catches the first file") {
@@ -372,68 +374,70 @@ class EventsStreamSpec extends SparkSpec {
     // TIMESTAMP(MICROS) file (the round-8 corpus layout; the declared
     // BIGINT schema reads raw micros) and an int64-nanos file. Both
     // must land in the same correct event-time windows.
-    val tmp = java.nio.file.Files.createTempDirectory("graft-empty").toString
-    val eventsDir = s"$tmp/events"; val outDir = s"$tmp/out"; val ck = s"$tmp/ck"
-    java.nio.file.Files.createDirectory(java.nio.file.Paths.get(eventsDir))
-    val query = EventsStream.run(spark, eventsDir, outDir, ck)
-    try {
-      query.processAllAvailable() // zero batches: must idle, not die
-      assert(query.isActive)
-      // micros file: write the Timestamp column as TIMESTAMP(MICROS)
-      // (the session default is legacy INT96, which no BIGINT read maps)
-      val prevOut = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
-      spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      try Seq(EventsStream.Event(ts(0, 10), 1L, "click", 1.0)).toDF()
-        .write.mode("append").parquet(eventsDir)
-      finally prevOut match {
-        case Some(v) => spark.conf.set("spark.sql.parquet.outputTimestampType", v)
-        case None => spark.conf.unset("spark.sql.parquet.outputTimestampType")
-      }
-      // nanos file: the engine's own int64 layout
-      Seq(EventsStream.Event(ts(1, 0), 3L, "click", 2.0),
-        EventsStream.Event(ts(20, 0), 2L, "view", 9.0)).toDF()
-        .withColumn("ts", expr("unix_micros(ts) * 1000"))
-        .write.mode("append").parquet(eventsDir)
-      query.processAllAvailable()
-      val out = spark.read.parquet(outDir).collect()
-      // both click events (one per unit) fell into the SAME 5-minute
-      // window — a baked wrong factor would send one to ~1970
-      assert(out.exists(r => r.getString(1) == "click" && r.getLong(2) == 2L),
-        s"clicks from the two units did not co-window: ${out.toSeq}")
-    } finally query.stop()
+    withTempDir("graft-empty") { tmp =>
+      val eventsDir = s"$tmp/events"; val outDir = s"$tmp/out"; val ck = s"$tmp/ck"
+      java.nio.file.Files.createDirectory(java.nio.file.Paths.get(eventsDir))
+      val query = EventsStream.run(spark, eventsDir, outDir, ck)
+      try {
+        query.processAllAvailable() // zero batches: must idle, not die
+        assert(query.isActive)
+        // micros file: write the Timestamp column as TIMESTAMP(MICROS)
+        // (the session default is legacy INT96, which no BIGINT read maps)
+        val prevOut = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
+        spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        try Seq(EventsStream.Event(ts(0, 10), 1L, "click", 1.0)).toDF()
+          .write.mode("append").parquet(eventsDir)
+        finally prevOut match {
+          case Some(v) => spark.conf.set("spark.sql.parquet.outputTimestampType", v)
+          case None => spark.conf.unset("spark.sql.parquet.outputTimestampType")
+        }
+        // nanos file: the engine's own int64 layout
+        Seq(EventsStream.Event(ts(1, 0), 3L, "click", 2.0),
+          EventsStream.Event(ts(20, 0), 2L, "view", 9.0)).toDF()
+          .withColumn("ts", expr("unix_micros(ts) * 1000"))
+          .write.mode("append").parquet(eventsDir)
+        query.processAllAvailable()
+        val out = spark.read.parquet(outDir).collect()
+        // both click events (one per unit) fell into the SAME 5-minute
+        // window — a baked wrong factor would send one to ~1970
+        assert(out.exists(r => r.getString(1) == "click" && r.getLong(2) == 2L),
+          s"clicks from the two units did not co-window: ${out.toSeq}")
+      } finally query.stop()
+    }
   }
 
   test("run() restarted from its checkpoint resumes exactly-once") {
     import org.apache.spark.sql.functions.expr
-    val tmp = java.nio.file.Files.createTempDirectory("graft-restart").toString
-    val eventsDir = s"$tmp/events"; val outDir = s"$tmp/out"; val ck = s"$tmp/ck"
-    def landing(events: Seq[EventsStream.Event]) = events.toDF()
-      .withColumn("ts", expr("unix_micros(ts) * 1000"))
-    landing(Seq(
-      EventsStream.Event(ts(0, 10), 1L, "click", 1.0),
-      EventsStream.Event(ts(0, 40), 2L, "click", 2.0),
-      EventsStream.Event(ts(2, 0), 2L, "view", 3.0)))
-      .write.parquet(eventsDir)
-    val q1 = EventsStream.run(spark, eventsDir, outDir, ck)
-    try q1.processAllAvailable() finally q1.stop()
-    // crash/redeploy: a NEW query object, SAME checkpoint. New data lands
-    // while the query is down; the restart must pick up only the unseen
-    // file, close the first windows once, and never re-emit them.
-    landing(Seq(EventsStream.Event(ts(20, 0), 3L, "view", 9.0)))
-      .write.mode("append").parquet(eventsDir)
-    val q2 = EventsStream.run(spark, eventsDir, outDir, ck)
-    try {
-      q2.processAllAvailable()
-      val out = spark.read.parquet(outDir)
-        .select($"bucket_start", $"event_type", $"n", $"sum_value")
-        .as[(Timestamp, String, Long, Double)].collect().toSeq
-      // the [10:00, 10:05) click window closed EXACTLY once with both rows
-      val clickRows = out.filter(r => r._2 == "click")
-      assert(clickRows === Seq((ts(0, 0), "click", 2L, 3.0)),
-        s"restart must not duplicate or split the closed window: $out")
-      // and the pre-crash view event survived into its own window once
-      assert(out.count(r => r._2 == "view" && r._3 == 1L && r._4 == 3.0) === 1)
-    } finally q2.stop()
+    withTempDir("graft-restart") { tmp =>
+      val eventsDir = s"$tmp/events"; val outDir = s"$tmp/out"; val ck = s"$tmp/ck"
+      def landing(events: Seq[EventsStream.Event]) = events.toDF()
+        .withColumn("ts", expr("unix_micros(ts) * 1000"))
+      landing(Seq(
+        EventsStream.Event(ts(0, 10), 1L, "click", 1.0),
+        EventsStream.Event(ts(0, 40), 2L, "click", 2.0),
+        EventsStream.Event(ts(2, 0), 2L, "view", 3.0)))
+        .write.parquet(eventsDir)
+      val q1 = EventsStream.run(spark, eventsDir, outDir, ck)
+      try q1.processAllAvailable() finally q1.stop()
+      // crash/redeploy: a NEW query object, SAME checkpoint. New data lands
+      // while the query is down; the restart must pick up only the unseen
+      // file, close the first windows once, and never re-emit them.
+      landing(Seq(EventsStream.Event(ts(20, 0), 3L, "view", 9.0)))
+        .write.mode("append").parquet(eventsDir)
+      val q2 = EventsStream.run(spark, eventsDir, outDir, ck)
+      try {
+        q2.processAllAvailable()
+        val out = spark.read.parquet(outDir)
+          .select($"bucket_start", $"event_type", $"n", $"sum_value")
+          .as[(Timestamp, String, Long, Double)].collect().toSeq
+        // the [10:00, 10:05) click window closed EXACTLY once with both rows
+        val clickRows = out.filter(r => r._2 == "click")
+        assert(clickRows === Seq((ts(0, 0), "click", 2L, 3.0)),
+          s"restart must not duplicate or split the closed window: $out")
+        // and the pre-crash view event survived into its own window once
+        assert(out.count(r => r._2 == "view" && r._3 == 1L && r._4 == 3.0) === 1)
+      } finally q2.stop()
+    }
   }
 
   test("clickPurchaseJoin attributes purchases within 10 minutes of a click") {
@@ -597,26 +601,27 @@ class EventsStreamSpec extends SparkSpec {
   test("runForeachBatch hands closed windows to the sink with increasing batch ids") {
     implicit val sq = spark.sqlContext
     val input = MemoryStream[EventsStream.Event]
-    val ck = java.nio.file.Files.createTempDirectory("graft-feb").toString
-    val query = EventsStream.runForeachBatch(input.toDF(), ck) { (df, id) =>
-      val rows = df.select("event_type", "n").collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSeq
-      EventsStreamSpec.batches.add(id -> rows)
+    withTempDir("graft-feb") { ck =>
+      val query = EventsStream.runForeachBatch(input.toDF(), ck) { (df, id) =>
+        val rows = df.select("event_type", "n").collect()
+          .map(r => (r.getString(0), r.getLong(1))).toSeq
+        EventsStreamSpec.batches.add(id -> rows)
+      }
+      try {
+        input.addData(
+          EventsStream.Event(ts(0, 10), 1L, "click", 1.0),
+          EventsStream.Event(ts(2, 0), 2L, "click", 2.0))
+        query.processAllAvailable()
+        // advance past the watermark so the 10:00 window closes and is emitted
+        input.addData(EventsStream.Event(ts(20, 0), 3L, "view", 9.0))
+        query.processAllAvailable()
+        import scala.jdk.CollectionConverters._
+        val seen = EventsStreamSpec.batches.asScala.toSeq.sortBy(_._1)
+        assert(seen.map(_._1) === seen.map(_._1).sorted, "batch ids increase")
+        assert(seen.flatMap(_._2).contains(("click", 2L)),
+          s"closed click window not delivered: $seen")
+      } finally query.stop()
     }
-    try {
-      input.addData(
-        EventsStream.Event(ts(0, 10), 1L, "click", 1.0),
-        EventsStream.Event(ts(2, 0), 2L, "click", 2.0))
-      query.processAllAvailable()
-      // advance past the watermark so the 10:00 window closes and is emitted
-      input.addData(EventsStream.Event(ts(20, 0), 3L, "view", 9.0))
-      query.processAllAvailable()
-      import scala.jdk.CollectionConverters._
-      val seen = EventsStreamSpec.batches.asScala.toSeq.sortBy(_._1)
-      assert(seen.map(_._1) === seen.map(_._1).sorted, "batch ids increase")
-      assert(seen.flatMap(_._2).contains(("click", 2L)),
-        s"closed click window not delivered: $seen")
-    } finally query.stop()
   }
 
   test("sessionize keeps running per-user state across micro-batches") {
